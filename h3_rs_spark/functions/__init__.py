@@ -13,7 +13,6 @@ from .udfs import (  # noqa: F401
     h3_distance_udf,
     h3_is_valid_udf,
     h3_is_pentagon_udf,
-    h3_to_children_udf,
     h3_to_geo_udf,
     k_ring_distances_udf,
     k_ring_udf,

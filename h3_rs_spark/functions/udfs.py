@@ -307,29 +307,14 @@ def geo_disk_dyn_udf():
     return _f.asNondeterministic()
 
 
-@functools.lru_cache(maxsize=64)
-def h3_to_children_udf(child_res: int):
-    @F.pandas_udf(ArrayType(LongType()))
-    def _f(cell: pd.Series) -> pd.Series:
-        c = cell.to_numpy(dtype=np.int64)
-        owner, kids = indexing.to_children_batch(c, child_res)
-        ord_ = np.argsort(owner, kind="stable")  # group rows contiguously
-        owner, kids = owner[ord_], kids[ord_]
-        counts = np.bincount(owner, minlength=len(c))
-        return pd.Series(
-            [a.tolist() for a in np.split(kids, np.cumsum(counts)[:-1])]
-        )
-
-    return _f
-
-
 @F.pandas_udf(ArrayType(LongType()))
 def h3_line_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     """Minimal grid path per pair (H3 h3Line; local-frame cube lerp with
     greedy fallback — see h3core.localij). Batched over the Arrow batch
     (r7): greedy-fallback pairs walk together, one neighbors() kernel
-    call per step for the whole batch (path-identical to the scalar
-    loop, pinned by test_h3_line_batch_parity)."""
+    call per step for the whole batch (path-identical to per-pair
+    h3_line, pinned by
+    tests/test_h3_goldens.py::test_h3_line_batch_parity)."""
     av = a.to_numpy(dtype=np.int64)
     bv = b.to_numpy(dtype=np.int64)
     return pd.Series(

@@ -262,7 +262,10 @@ def h3_line(a: int, b: int, max_steps: int = 10_000) -> np.ndarray:
     path = h3_line_local(int(a), int(b))
     if path is not None:
         return path
-    return _h3_line_greedy(int(a), int(b), max_steps)
+    return _h3_line_greedy_batch(
+        np.array([a], dtype=np.int64), np.array([b], dtype=np.int64),
+        max_steps,
+    )[0]
 
 
 def h3_line_batch(a, b, max_steps: int = 10_000) -> list[np.ndarray]:
@@ -272,10 +275,8 @@ def h3_line_batch(a, b, max_steps: int = 10_000) -> list[np.ndarray]:
     kernel call per walk step for the whole batch instead of one per
     step per pair (q38's 46 fallback pairs: 475 single-cell kernel
     calls -> ~15 batched ones, 4.3 s -> ~0.2 s). Paths are identical
-    to per-pair h3_line: neighbors() orders each owner's candidates by
-    cell value in both the single and batched form (np.unique), so the
-    greedy argmax tie-breaks the same way — pinned by
-    tests/test_operators.py::test_h3_line_batch_parity."""
+    to per-pair h3_line, whose fallback is the same walk on a batch of
+    one — pinned by tests/test_h3_goldens.py::test_h3_line_batch_parity."""
     from .localij import h3_line_local
 
     a = np.atleast_1d(np.asarray(a, dtype=np.int64))
@@ -300,9 +301,14 @@ def h3_line_batch(a, b, max_steps: int = 10_000) -> list[np.ndarray]:
 def _h3_line_greedy_batch(
     a_arr: np.ndarray, b_arr: np.ndarray, max_steps: int = 10_000
 ) -> list[np.ndarray]:
-    """Batched twin of _h3_line_greedy — same walk, same argmax, same
-    stuck/exhaustion semantics, per-step kernel calls batched over all
-    unfinished pairs."""
+    """Greedy great-circle walk fallback (connected, endpoints exact;
+    not guaranteed minimal), per-step kernel calls batched over all
+    unfinished pairs. Each step moves to the neighbor closest to the
+    target's unit vector; a walk stops at the target, when the next
+    cell repeats one of its last three (stuck — the repeated cell is
+    NOT appended), or after max_steps. The one greedy walk: h3_line
+    calls it on a batch of one, so the per-pair and batched paths
+    cannot score a near-tie differently."""
     tlat, tlng = fk.h3_to_geo(b_arr)
     txyz = geo_to_xyz(np.radians(tlat), np.radians(tlng))  # (n, 3)
     paths = [[int(x)] for x in a_arr.tolist()]
@@ -321,32 +327,10 @@ def _h3_line_greedy_batch(
             cand = nb[m]
             nxt = int(cand[int(np.argmax(dots[m]))])
             if nxt in paths[g][-3:]:
-                done[g] = True  # stuck (matches the scalar walk: the
-                continue  # repeated cell is NOT appended)
+                done[g] = True  # stuck: the repeated cell is NOT appended
+                continue
             paths[g].append(nxt)
             cur[g] = nxt
             if nxt == int(b_arr[g]):
                 done[g] = True
     return [np.array(p, dtype=np.int64) for p in paths]
-
-
-def _h3_line_greedy(a: int, b: int, max_steps: int = 10_000) -> np.ndarray:
-    """Greedy great-circle walk fallback (connected, endpoints exact;
-    not guaranteed minimal)."""
-    a, b = int(a), int(b)
-    tlat, tlng = fk.h3_to_geo(np.array([b], dtype=np.int64))
-    txyz = geo_to_xyz(np.radians(tlat), np.radians(tlng))[0]
-    path = [a]
-    cur = a
-    for _ in range(max_steps):
-        if cur == b:
-            return np.array(path, dtype=np.int64)
-        _, nb = neighbors(np.array([cur], dtype=np.int64))
-        lat, lng = fk.h3_to_geo(nb)
-        xyz = geo_to_xyz(np.radians(lat), np.radians(lng))
-        best = int(np.argmax(xyz @ txyz))
-        cur = int(nb[best])
-        if cur in path[-3:]:
-            break  # stuck (shouldn't happen)
-        path.append(cur)
-    return np.array(path, dtype=np.int64)

@@ -16,11 +16,11 @@
 All signature computation is Arrow-batched numpy (no per-row Python in
 the heavy path); pair generation is a self-join on bucket keys.
 
-r6: the three LSH operators default to distinct_content=True — buckets
-see ONE representative per distinct content and member pairs expand
-afterward, so duplicate-heavy corpora (the r6 sf10 proof run: 100-member
-exact-dup groups → C(100,2)·groups·bands candidate rows → 77 GB of
-shuffle spill) cost LSH work proportional to distinct content only.
+The three LSH operators band ONE representative per distinct content
+and expand member pairs afterward, so duplicate-heavy corpora (the r6
+sf10 proof run: 100-member exact-dup groups → C(100,2)·groups·bands
+candidate rows → 77 GB of shuffle spill) cost LSH work proportional to
+distinct content only.
 """
 
 from __future__ import annotations
@@ -322,9 +322,7 @@ def _expand_member_pairs(
     return cross.unionByName(within).unionByName(star)
 
 
-def _bucket_pairs(
-    banded: DataFrame, keys: list, cap: int, window_form: bool = True
-) -> DataFrame:
+def _bucket_pairs(banded: DataFrame, keys: list, cap: int) -> DataFrame:
     """Candidate pairs (id_a < id_b) from LSH buckets.
 
     Buckets with <= cap members pair all-vs-all within the bucket. A
@@ -347,24 +345,17 @@ def _bucket_pairs(
     are dropped) are pinned by tests/test_dedup.py. Exact duplicates
     are never lost: connectivity through the anchor survives.
 
-    Plan shape (r7, guide §2.4, window_form=True): bucket size and
-    min-id anchor come from ONE window over the banded relation — a
-    single Exchange on the bucket keys that the self-join then reuses —
-    instead of the r6 groupBy-count + join-back + anchors-groupBy +
-    join chain (4 exchanges + 2 joins). The window buffers one bucket
-    per task (narrow (keys, id) rows, spills via
-    UnsafeExternalSorter). The r5 refutation of this same rewrite was
-    RE-MEASURED this round and survives only on the path it was
-    measured on: with banding over raw corpus rows
-    (distinct_content=False) the window's full sort of the 16x-corpus
-    banded relation loses big (13.5 s vs 8.5 s at 50k docs), because
-    AQE broadcasts the small count relation back for free — so the
-    legacy callers pass window_form=False and keep the groupBy+join
-    chain. On the r6+ distinct-content default the banded relation is
-    bounded by DISTINCT signatures and the window form measured equal
-    or better at sf0.1 AND sf1 (same-session A/B: 1.58–1.79 vs
-    1.79–1.84 s, 1.96–2.19 vs 2.22 s). last_bucket_stats() keeps its
-    own partial-agg'd count relation, unchanged either way."""
+    Plan shape (r7, guide §2.4): bucket size and min-id anchor come
+    from ONE window over the banded relation — a single Exchange on
+    the bucket keys that the self-join then reuses — instead of a
+    groupBy-count + join-back + anchors-groupBy + join chain (4
+    exchanges + 2 joins). The window buffers one bucket per task
+    (narrow (keys, id) rows, spills via UnsafeExternalSorter). The
+    banded relation is bounded by DISTINCT content (callers band one
+    representative per distinct signature), and there the window form
+    measured equal or better than the join chain at sf0.1 AND sf1
+    (same-session A/B: 1.58–1.79 vs 1.79–1.84 s, 1.96–2.19 vs 2.22 s).
+    last_bucket_stats() keeps its own partial-agg'd count relation."""
     global _LAST_BUCKET_STATS
     if not cap:
         a, b = banded.alias("a"), banded.alias("b")
@@ -396,30 +387,19 @@ def _bucket_pairs(
             " AS BIGINT) AS skipped_pairs"
         ),
     )
-    if window_form:
-        # one selectExpr with SQL text (r7): same plan as the
-        # Window/withColumns form, one JVM parse instead of ~10 py4j
-        # expression round-trips per call
-        part = ", ".join(keys)
-        counted = banded.selectExpr(
-            "*",
-            f"count(*) OVER (PARTITION BY {part}) AS _bc",
-            f"min(id) OVER (PARTITION BY {part}) AS _anchor",
-        )
-        normal = counted.where(f"_bc <= {cap}").drop("_bc", "_anchor")
-        star = counted.where(
-            f"_bc > {cap} AND id != _anchor"
-        ).selectExpr("_anchor AS id_a", "id AS id_b")
-    else:
-        counted = banded.join(counts, keys)
-        normal = counted.where(f"_bc <= {cap}").drop("_bc")
-        hot = counted.where(f"_bc > {cap}").drop("_bc")
-        anchors = hot.groupBy(*keys).agg(F.expr("min(id) AS _anchor"))
-        star = (
-            hot.join(anchors, keys)
-            .where("id != _anchor")
-            .selectExpr("_anchor AS id_a", "id AS id_b")
-        )
+    # one selectExpr with SQL text (r7): same plan as the
+    # Window/withColumns form, one JVM parse instead of ~10 py4j
+    # expression round-trips per call
+    part = ", ".join(keys)
+    counted = banded.selectExpr(
+        "*",
+        f"count(*) OVER (PARTITION BY {part}) AS _bc",
+        f"min(id) OVER (PARTITION BY {part}) AS _anchor",
+    )
+    normal = counted.where(f"_bc <= {cap}").drop("_bc", "_anchor")
+    star = counted.where(
+        f"_bc > {cap} AND id != _anchor"
+    ).selectExpr("_anchor AS id_a", "id AS id_b")
     a, b = normal.alias("a"), normal.alias("b")
     cond = F.expr(
         " AND ".join(f"a.{k} = b.{k}" for k in keys) + " AND a.id < b.id"
@@ -428,17 +408,16 @@ def _bucket_pairs(
     return pairs.unionByName(star).dropDuplicates(["id_a", "id_b"])
 
 
-_MINHASH_A = None
-_MINHASH_B = None
-
-
+@functools.lru_cache(maxsize=16)
 def _minhash_params(k: int):
-    global _MINHASH_A, _MINHASH_B
-    if _MINHASH_A is None or len(_MINHASH_A) < k:
-        rng = np.random.default_rng(1234)
-        _MINHASH_A = rng.integers(1, 1 << 61, size=k, dtype=np.uint64) | np.uint64(1)
-        _MINHASH_B = rng.integers(0, 1 << 61, size=k, dtype=np.uint64)
-    return _MINHASH_A[:k], _MINHASH_B[:k]
+    """(a, b) for k hash functions, a pure function of k. Memoized per
+    k, never sliced from a longer draw: b comes after a in the stream,
+    so b[:k] of a 2k draw differs from a k draw, and a worker that saw
+    a larger num_hashes first would sign the same text differently."""
+    rng = np.random.default_rng(1234)
+    a = rng.integers(1, 1 << 61, size=k, dtype=np.uint64) | np.uint64(1)
+    b = rng.integers(0, 1 << 61, size=k, dtype=np.uint64)
+    return a, b
 
 
 @functools.lru_cache(maxsize=16)
@@ -469,55 +448,6 @@ def minhash_signature_udf(num_hashes: int = 64, shingle: int = 5):
     return _f
 
 
-def minhash_signature_jvm(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 64,
-    shingle: int = 5,
-) -> DataFrame:
-    """All-JVM minhash signatures (VERDICT r4 #6 experiment): character
-    shingles via transform(sequence(...)) -> substring, hashed with
-    built-in xxhash64 where the per-function seed literal makes
-    num_hashes independent hash functions, min via array_min — the
-    whole signature stays inside whole-stage codegen with zero Arrow
-    transfer and zero shuffle.
-
-    NOTE: a DIFFERENT hash family than minhash_signature_udf (the
-    polynomial-shingle + (a*h+b) mod 2^61-1 Arrow path), so signature
-    VALUES differ; est_jaccard is statistically equivalent (classic
-    k-hash-function minhash under any fixed total order) and the
-    exact-duplicate contract — identical text => identical signature
-    => est 1.0, all bands collide — is identical. A/B numbers in
-    BENCH/BASELINE.md round 5."""
-    txt = F.coalesce(F.col(text_col), F.lit(""))
-    sh = F.transform(
-        F.sequence(
-            F.lit(1), F.greatest(F.char_length(txt) - (shingle - 1), F.lit(1))
-        ),
-        lambda i: F.substring(txt, i, shingle),
-    )
-
-    def hash_with_seed(seed: int):
-        # MUST be a single-parameter lambda: a two-parameter lambda
-        # (e.g. `lambda s, j=j: ...`) makes pyspark pass transform's
-        # optional INDEX as the second argument, silently shadowing the
-        # captured seed — every band then hashes (index, shingle) and
-        # all signature components collapse to one value (found r5 via
-        # the parsed plan: `xxhash64(lambda y_3, lambda x_2)`)
-        return lambda s: F.xxhash64(F.lit(seed), s)
-
-    sig = F.array(
-        *[
-            F.array_min(F.transform(F.col("_sh"), hash_with_seed(j)))
-            for j in range(num_hashes)
-        ]
-    )
-    return df.withColumn("_sh", sh).select(
-        F.col(id_col).alias("id"), sig.alias("sig")
-    )
-
-
 def minhash_lsh_dedup(
     df: DataFrame,
     text_col: str = "text",
@@ -527,70 +457,44 @@ def minhash_lsh_dedup(
     shingle: int = 5,
     jaccard_threshold: float = 0.7,
     bucket_cap: int = 10_000,
-    impl: str = "arrow",
-    distinct_content: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs (id_a < id_b, est_jaccard >= threshold).
 
-    distinct_content=True (default, r6): banding/pairing runs on ONE
-    representative per distinct SIGNATURE and member pairs are expanded
-    afterward (_expand_member_pairs) — exact duplicates never enter a
-    bucket, their recall is structurally 100% regardless of bucket_cap,
-    and LSH join work scales with distinct content, not raw rows (the
-    r6 sf10 run measured 77 GB of spill from 100-member duplicate
-    groups without this). Bit-identical output to the legacy path
-    (est_jaccard is a pure function of the signatures). False preserves
-    the legacy every-row-through-buckets path.
+    Banding/pairing runs on ONE representative per distinct SIGNATURE
+    and member pairs are expanded afterward (_expand_member_pairs) —
+    exact duplicates never enter a bucket, their recall is structurally
+    100% regardless of bucket_cap, and LSH join work scales with
+    distinct content, not raw rows (the r6 sf10 run measured 77 GB of
+    spill from 100-member duplicate groups when every row went through
+    the buckets).
 
-    Recall contract for NEAR (non-identical) dups: unchanged — a bucket
-    exceeding bucket_cap pairs only through its min-id anchor (see
-    _bucket_pairs); check last_bucket_stats() (now counted over
-    distinct-content rows) after an action and raise bucket_cap if its
-    counters are nonzero.
-
-    impl: "arrow" (pandas-UDF signatures, default) or "jvm"
-    (xxhash64/transform signatures, minhash_signature_jvm) — identical
-    pipeline shape and exact-dup contract, different hash family."""
-    if impl not in ("arrow", "jvm"):
-        raise ValueError(
-            f"minhash_lsh_dedup: impl must be 'arrow' or 'jvm', got {impl!r}"
-        )
+    Recall contract for NEAR (non-identical) dups: a bucket exceeding
+    bucket_cap pairs only through its min-id anchor (see _bucket_pairs);
+    check last_bucket_stats() (counted over distinct-content rows) after
+    an action and raise bucket_cap if its counters are nonzero."""
     rows_per_band = num_hashes // bands
     df = _ensure_parallelism(df)
-    # persist signatures: they feed both self-join branches and the
-    # verification re-attach — without this the signature stage runs 3x
-    if impl == "jvm":
-        sig = _persist_tracked(
-            minhash_signature_jvm(df, text_col, id_col, num_hashes, shingle)
+    # persist signatures: they feed the representative groupBy and the
+    # membership join-back. No eager count here (r7):
+    # _tag_representatives' own eager count runs a LINEAR plan (UDF ->
+    # sig cache -> groupBy -> agg cache) that populates both caches in
+    # one job with no parallel AQE stages to race.
+    sig = _persist_tracked(
+        df.select(
+            F.col(id_col).alias("id"),
+            minhash_signature_udf(num_hashes, shingle)(
+                F.col(text_col)
+            ).alias("sig"),
         )
-    else:
-        sig = _persist_tracked(
-            df.select(
-                F.col(id_col).alias("id"),
-                minhash_signature_udf(num_hashes, shingle)(
-                    F.col(text_col)
-                ).alias("sig"),
-            )
-        )
-    members = None
-    if not distinct_content:
-        sig.count()  # materialize eagerly: parallel AQE query stages
-        # would otherwise race the cache and run the Arrow UDF 2-4x
-        # concurrently. On the distinct_content path this action is
-        # redundant (r7): _tag_representatives' own eager count runs a
-        # LINEAR plan (UDF -> sig cache -> groupBy -> agg cache) that
-        # populates both caches in one job with no parallel stages to
-        # race — one driver round-trip instead of two.
-    if distinct_content:
-        # collapse on the SIGNATURE (not the raw text): est_jaccard is a
-        # pure function of the two signatures, so banding one row per
-        # distinct signature and expanding afterward reproduces the
-        # legacy output bit-for-bit (identical-sig pairs score est 1.0
-        # on both paths). Signatures still compute for every row
-        # (linear, Arrow-fast); the collapse costs one partial-agg'd
-        # groupBy plus a membership join-back over the cached sig
-        # relation (_tag_representatives).
-        members, sig = _tag_representatives(sig, "sig")
+    )
+    # collapse on the SIGNATURE (not the raw text): est_jaccard is a
+    # pure function of the two signatures, so banding one row per
+    # distinct signature and expanding afterward loses no pair
+    # (identical-sig pairs score est 1.0). Signatures still compute for
+    # every row (linear, Arrow-fast); the collapse costs one
+    # partial-agg'd groupBy plus a membership join-back over the cached
+    # sig relation (_tag_representatives).
+    members, sig = _tag_representatives(sig, "sig")
     # narrow (id, band, bucket) rows through the self-join + dedup; the
     # wide signature arrays re-attach afterwards via shuffle join on id.
     # Built as ONE selectExpr SQL string (r7): the Column-object form
@@ -610,10 +514,7 @@ def minhash_lsh_dedup(
     banded = sig.selectExpr(
         "id", f"explode(array({band_items})) AS bb"
     ).selectExpr("id", "bb.band AS band", "bb.bucket AS bucket")
-    pairs = _bucket_pairs(
-        banded, ["band", "bucket"], bucket_cap,
-        window_form=distinct_content,
-    )
+    pairs = _bucket_pairs(banded, ["band", "bucket"], bucket_cap)
     # re-attach the wide signature arrays with plain shuffle joins on id:
     # never F.broadcast(sig) — the signature relation is proportional to
     # the FULL corpus and a forced broadcast OOMs at scale. AQE still
@@ -637,11 +538,7 @@ def minhash_lsh_dedup(
         .where(F.col("est_jaccard") >= jaccard_threshold)
         .select("id_a", "id_b", "est_jaccard")
     )
-    if distinct_content:
-        out = _expand_member_pairs(
-            members, out, "est_jaccard", 1.0, bucket_cap
-        )
-    return out
+    return _expand_member_pairs(members, out, "est_jaccard", 1.0, bucket_cap)
 
 
 @functools.lru_cache(maxsize=16)
@@ -696,17 +593,15 @@ def simhash_dedup(
     id_col: str = "doc_id",
     max_hamming: int = 8,
     bucket_cap: int = 10_000,
-    distinct_content: bool = True,
 ) -> DataFrame:
     """Near-dup pairs by simhash hamming distance, banded on 4x16-bit
     chunks (a pair within hamming<=3 shares at least one exact chunk;
     wider distances may need more bands — standard recall/cost tradeoff,
     verified exactly afterwards). Over-cap buckets star-pair: recall
     contract + last_bucket_stats() telemetry in _bucket_pairs.
-    distinct_content=True (default): buckets see one representative per
-    distinct 64-bit simhash VALUE (hamming is a pure function of the
-    two values, so the collapse+expansion reproduces the legacy output
-    exactly); member pairs expand afterward with hamming 0 within
+    Buckets see one representative per distinct 64-bit simhash VALUE
+    (hamming is a pure function of the two values, so the collapse
+    loses no pair); member pairs expand afterward with hamming 0 within
     groups — see minhash_lsh_dedup."""
     df = _ensure_parallelism(df)
     sim = _persist_tracked(
@@ -715,12 +610,7 @@ def simhash_dedup(
             simhash_udf()(F.col(text_col)).alias("sh"),
         )
     )
-    members = None
-    if not distinct_content:
-        sim.count()  # eager: see minhash_lsh_dedup (redundant on the
-        # distinct path — _tag_representatives materializes both caches)
-    if distinct_content:
-        members, sim = _tag_representatives(sim, "sh")
+    members, sim = _tag_representatives(sim, "sh")
     chunks = [
         F.struct(
             F.lit(i).alias("band"),
@@ -732,10 +622,7 @@ def simhash_dedup(
         "id", "bb.band", "bb.bucket"
     )
     pairs = (
-        _bucket_pairs(
-            banded, ["band", "bucket"], bucket_cap,
-            window_form=distinct_content,
-        )
+        _bucket_pairs(banded, ["band", "bucket"], bucket_cap)
         # shuffle-join re-attach (see minhash_lsh_dedup): no forced
         # broadcast of the corpus-sized simhash relation
         .join(sim.withColumnsRenamed({"id": "id_a", "sh": "sh_a"}), "id_a")
@@ -747,9 +634,7 @@ def simhash_dedup(
         .where(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
     )
-    if distinct_content:
-        out = _expand_member_pairs(members, out, "hamming", 0, bucket_cap)
-    return out
+    return _expand_member_pairs(members, out, "hamming", 0, bucket_cap)
 
 
 def ngram_jaccard_pairs(
@@ -803,7 +688,6 @@ def embedding_near_dup(
     cos_threshold: float = 0.25,
     bucket_cap: int = 10_000,
     target_bucket_size: int = 64,
-    distinct_content: bool = True,
 ) -> DataFrame:
     """Cosine near-dup pairs via *banded* random-hyperplane LSH + exact
     verify: a pair is a candidate if any band's sign pattern matches
@@ -827,20 +711,17 @@ def embedding_near_dup(
     star-pair: recall contract + last_bucket_stats() telemetry in
     _bucket_pairs.
 
-    distinct_content=True (default): LSH runs on one representative per
-    distinct vector (grouped on the exact array — at extreme scale
-    substitute a 128-bit content digest) and member pairs expand with
-    cos_sim 1.0 within groups; see minhash_lsh_dedup. The auto plane
-    sizing then counts DISTINCT vectors, the correct occupancy basis.
-    Equivalence to the legacy path is after the 6-decimal rounding both
-    paths apply, with ONE deliberate divergence (round-6 review):
-    bit-identical ALL-ZERO vectors. Legacy computes cos via try_divide
-    -> NULL -> drops the pair (before round 6 a plain `/` CRASHED the
-    whole query under Spark 4's default ANSI mode whenever a zero-norm
-    vector hit any candidate pair); the collapse emits it at cos_sim
-    1.0, because two byte-identical embeddings ARE exact duplicates
-    regardless of their norm — the dedup answer, not the cosine edge
-    case. Pinned by
+    LSH runs on one representative per distinct vector (grouped on the
+    exact array — at extreme scale substitute a 128-bit content digest)
+    and member pairs expand with cos_sim 1.0 within groups; see
+    minhash_lsh_dedup. The auto plane sizing counts DISTINCT vectors,
+    the correct occupancy basis.
+
+    Zero vectors: bit-identical ALL-ZERO embeddings pair at cos_sim
+    1.0 (they ARE exact duplicates regardless of their norm). A
+    zero-norm vector in a cross-content candidate pair gets a NULL
+    cosine via try_divide and drops out; it never crashes the query
+    under Spark 4's default ANSI mode. Pinned by
     tests/test_dedup.py::test_zero_vector_pairs_divergence."""
     # cache the (id, vector) projection FIRST, then derive the corpus
     # count for auto plane sizing from the cache — sizing must not cost
@@ -852,15 +733,10 @@ def embedding_near_dup(
             F.col(vec_col).cast("array<double>").alias("v"),
         )
     )
-    members = None
-    if not distinct_content:
-        vecs0.count()  # eager cache: see minhash_lsh_dedup (redundant
-        # on the distinct path — _tag_representatives materializes it)
-    if distinct_content:
-        # collapse on the raw vector array (exact equality; at extreme
-        # scale substitute a 128-bit content digest) — one window
-        # shuffle over the cached projection, see minhash_lsh_dedup
-        members, vecs0 = _tag_representatives(vecs0, "v")
+    # collapse on the raw vector array (exact equality; at extreme
+    # scale substitute a 128-bit content digest) — one partial-agg'd
+    # groupBy over the cached projection, see minhash_lsh_dedup
+    members, vecs0 = _tag_representatives(vecs0, "v")
     n = vecs0.count()  # distinct-vector count: the occupancy basis
     if planes_per_band is None:
         planes_per_band = int(
@@ -899,9 +775,7 @@ def embedding_near_dup(
     )
     vecs = vecs0
     pairs = (
-        _bucket_pairs(
-            banded, ["bucket"], bucket_cap, window_form=distinct_content
-        )
+        _bucket_pairs(banded, ["bucket"], bucket_cap)
         # shuffle-join re-attach (see minhash_lsh_dedup): no forced
         # broadcast of the corpus-sized vector relation
         .join(vecs.withColumnsRenamed({"id": "id_a", "v": "va"}), "id_a")
@@ -915,8 +789,8 @@ def embedding_near_dup(
             # DIVIDE_BY_ZERO (found by the round-6 zero-vector test).
             # NULL cosine fails the threshold filter and the pair is
             # dropped — identical zero vectors still pair at 1.0
-            # through the distinct-content within-group path, which
-            # never divides.
+            # through the within-group expansion, which never
+            # divides.
             F.round(
                 F.try_divide(dot, norm(F.col("va")) * norm(F.col("vb"))), 6
             ),
@@ -924,9 +798,7 @@ def embedding_near_dup(
         .where(F.col("cos_sim") >= cos_threshold)
     )
     out = pairs.select("id_a", "id_b", "cos_sim")
-    if distinct_content:
-        out = _expand_member_pairs(members, out, "cos_sim", 1.0, bucket_cap)
-    return out
+    return _expand_member_pairs(members, out, "cos_sim", 1.0, bucket_cap)
 
 
 def _release_ckpt(df: DataFrame | None) -> None:

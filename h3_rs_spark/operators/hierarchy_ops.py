@@ -185,38 +185,21 @@ def antichain_violations(cells: DataFrame, cell_col: str = "cell") -> DataFrame:
 _MAX_EXPLODE_LEVELS = 4  # resolution levels between redistributions
 
 
-def children_one_level_col(cell_col):
-    """array<long> of a cell's DIRECT children (res+1) as one codegen'd
-    expression — the JVM twin of the kernel's to_children_batch level
-    step (r7; retires the Arrow children UDF from the uncompact path):
-    child = cell + 2^52 (res nibble bump) - 7*2^off + d*2^off, d in
-    0..6, with pentagons (pentagon base cell + all-center digits, the
-    same test as _is_pentagon_col) skipping the K digit d=1. 2^off via
-    pow-cast is exact (off <= 42)."""
-    c = F.col(cell_col) if isinstance(cell_col, str) else cell_col
-    r1 = h3_resolution(c) + 1
-    off = F.pow(F.lit(2.0), ((F.lit(15) - r1) * 3).cast("double")).cast(
-        "long"
-    )
-    base = c + F.lit(1 << 52) - F.lit(7) * off
-    digits = F.when(
-        _is_pentagon_col(c),
-        F.array(*[F.lit(d) for d in (0, 2, 3, 4, 5, 6)]),
-    ).otherwise(F.array(*[F.lit(d) for d in range(7)]))
-    return F.transform(digits, lambda d: base + d.cast("long") * off)
-
-
 _PENT_IN_SQL = ", ".join(str(b) for b in _PENT_BCS)
 
 
 def children_one_level_sql(x: str) -> str:
-    """SQL-text twin of children_one_level_col (r7): the Column form
-    costs ~120 py4j round-trips per call (~0.1-0.2 s of pure driver
-    latency on a slow gateway), paid once per explode LEVEL in the
-    uncompact loop; this string builds in Python and parses JVM-side
-    in one call, producing the identical expression tree (literal
-    subexpression duplication matches what Catalyst sees after the
-    Column tree expands). Parity pinned by
+    """array<long> of a cell's DIRECT children (res+1) as SQL text — the
+    JVM form of the kernel's to_children_batch level step (r7; retires
+    the Arrow children UDF from the uncompact path): child = cell +
+    2^52 (res nibble bump) - 7*2^off + d*2^off, d in 0..6, with
+    pentagons (pentagon base cell + all-center digits, the same test as
+    _is_pentagon_col) skipping the K digit d=1. 2^off via pow-cast is
+    exact (off <= 42). Text rather than a Column tree (r7): a Column
+    form costs ~120 py4j round-trips per call (~0.1-0.2 s of pure
+    driver latency on a slow gateway), paid once per explode LEVEL in
+    the uncompact loop; the string parses JVM-side in one call. Parity
+    with the kernel's indexing.to_children_batch pinned by
     tests/test_operators.py::test_children_one_level_sql_parity."""
     r1 = f"((shiftright({x}, 52) & 15) + 1)"
     off = f"CAST(pow(2.0D, CAST((15 - {r1}) * 3 AS DOUBLE)) AS BIGINT)"
@@ -252,8 +235,10 @@ def uncompact_cells_df(
     """Expand a mixed-res cell relation to uniform `res` (children
     explode; cells already at `res` pass through).
 
-    One pure-JVM Generate per resolution level (children_one_level_col
-    — rows already at `res` pass through as single-element arrays), so
+    One pure-JVM Generate per resolution level (children_one_level_sql,
+    pinned to the kernel's to_children_batch by
+    tests/test_operators.py::test_children_one_level_sql_parity — rows
+    already at `res` pass through as single-element arrays), so
     the whole expansion stays inside WholeStageCodegen with no
     JVM->Python Arrow transfer (r7; previously an Arrow children UDF
     shipped up to 7^4-element arrays per row across the boundary).

@@ -435,27 +435,12 @@ def _escalate_state(df: DataFrame, steps: int = 8) -> DataFrame:
     )
 
 
-def _edge_len_col(res_col):
-    """EDGE_LENGTH_M[res] as a codegen'd array lookup (res 0..15)."""
-    return F.element_at(
-        F.array(*[F.lit(float(e)) for e in EDGE_LENGTH_M]), res_col + 1
-    )
-
-
-def _guaranteed_radius_col(ring_col, res_col):
-    """Column form of _guaranteed_radius_m (same constants)."""
-    s = F.lit(_MIN_SPACING_FACTOR) * _edge_len_col(res_col)
-    return F.greatest(
-        F.lit(0.0), ((ring_col + 1) * F.lit(0.866) - F.lit(1.16)) * s
-    )
-
-
-# SQL-text twins for the round-loop hot path (r7 driver-latency work):
+# SQL text for the round-loop hot path (r7 driver-latency work):
 # operation-for-operation mirrors of haversine_m_col(q_lat, q_lng, lat,
-# lng) and _guaranteed_radius_col(ring, res_eff), so the expression
-# trees — and therefore every double — are identical to the Column
-# forms (repr() round-trips literals; the D suffix keeps them DOUBLE,
-# not DECIMAL). Pinned by tests/test_operators.py::test_knn_sql_parity.
+# lng) and the driver's scalar _guaranteed_radius_m(ring, res_eff), so
+# every double is identical to theirs (repr() round-trips literals; the
+# D suffix keeps them DOUBLE, not DECIMAL). Pinned bitwise by
+# tests/test_operators.py::test_knn_sql_parity.
 _HAVERSINE_SQL = (
     f"({2.0 * EARTH_RADIUS_M!r}D * ASIN(SQRT("
     "POWER(SIN(RADIANS(lat - q_lat) / 2), 2)"

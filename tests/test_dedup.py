@@ -55,39 +55,12 @@ class TestBucketCapSemantics:
             "skipped_pairs": 0,
         }
 
-    def test_exact_dups_survive_cap_connected(self, spark):
-        """End-to-end on the LEGACY every-row-through-buckets path
-        (distinct_content=False): 4 identical docs with bucket_cap=2
-        (every band's bucket is hot). All-pairs would be 6 pairs; the
-        contract only guarantees CONNECTIVITY through the min-id anchor
-        — and exact dups must never vanish entirely."""
-        docs = [(i, "the exact same document text repeated verbatim")
-                for i in (10, 11, 12, 13)]
-        docs += [(20 + i, f"unique filler document number {i} "
-                          f"with distinct content {i * 17}")
-                 for i in range(6)]
-        df = spark.createDataFrame(
-            pd.DataFrame(docs, columns=["doc_id", "text"])
-        )
-        pairs = dedup.minhash_lsh_dedup(
-            df, jaccard_threshold=0.9, bucket_cap=2, distinct_content=False
-        )
-        got = _pairs_set(pairs)
-        star = {(10, 11), (10, 12), (10, 13)}
-        assert star <= got
-        # connectivity: every dup id reachable from the anchor
-        ids = {10} | {b for a, b in got if a == 10}
-        assert ids == {10, 11, 12, 13}
-        stats = dedup.last_bucket_stats()
-        assert stats["hot_buckets"] > 0
-        assert stats["skipped_pairs"] > 0
-
     def test_distinct_content_exact_recall_under_cap(self, spark):
-        """r6 default path: the same 4-identical-doc corpus under the
-        same hostile bucket_cap=2. DETECTION recall is structurally
-        immune to the cap — duplicates never enter a bucket (one
-        representative per distinct text does), so every dup member
-        surfaces in a pair with its min-id representative at
+        """4 identical docs under a hostile bucket_cap=2 (every band's
+        bucket would be hot if each copy were banded). DETECTION recall
+        is structurally immune to the cap — duplicates never enter a
+        bucket (one representative per distinct text does), so every
+        dup member surfaces in a pair with its min-id representative at
         est_jaccard exactly 1.0 regardless of cap. ENUMERATION is
         cap-bounded by the same contract as _bucket_pairs: the group
         (n=4 > cap=2) star-pairs, so the redundant (non-rep, non-rep)
@@ -128,11 +101,13 @@ class TestBucketCapSemantics:
         ).all()
         dedup.release_cached()
 
-    def test_distinct_content_matches_legacy_on_natural_corpus(self, spark):
-        """On a corpus with duplicates AND near-dups, the default
-        representative path must return the SAME pair set and metrics
-        as the legacy path (signatures are content functions — the
-        collapse is semantics-preserving)."""
+    def test_distinct_content_pinned_on_natural_corpus(self, spark):
+        """On a corpus with duplicates AND near-dups, the representative
+        collapse must return the pinned pair set and metrics. The
+        expected frame is the sorted output of the every-row-through-
+        buckets pipeline the collapse replaced (signatures are content
+        functions, so the collapse is semantics-preserving): three
+        4-member content families, all 66 pairs over threshold."""
         base = [
             (i, f"document body shared prefix tokens {i % 3} and some "
                 f"more filler text common to the family variant {i % 3}")
@@ -142,19 +117,52 @@ class TestBucketCapSemantics:
             pd.DataFrame(base, columns=["doc_id", "text"])
         )
         kw = dict(jaccard_threshold=0.3, num_hashes=32, bands=8)
-        legacy = dedup.minhash_lsh_dedup(
-            df, distinct_content=False, **kw
-        ).toPandas()
         new = dedup.minhash_lsh_dedup(df, **kw).toPandas()
         dedup.release_cached()
         key = ["id_a", "id_b"]
-        lg = legacy.sort_values(key, ignore_index=True)
+        expected = pd.DataFrame([
+            (0, 1, 0.90625), (0, 2, 0.96875), (0, 3, 1.0), (0, 4, 0.90625),
+            (0, 5, 0.96875), (0, 6, 1.0), (0, 7, 0.90625), (0, 8, 0.96875),
+            (0, 9, 1.0), (0, 10, 0.90625), (0, 11, 0.96875),
+            (1, 2, 0.9375), (1, 3, 0.90625), (1, 4, 1.0), (1, 5, 0.9375),
+            (1, 6, 0.90625), (1, 7, 1.0), (1, 8, 0.9375), (1, 9, 0.90625),
+            (1, 10, 1.0), (1, 11, 0.9375),
+            (2, 3, 0.96875), (2, 4, 0.9375), (2, 5, 1.0), (2, 6, 0.96875),
+            (2, 7, 0.9375), (2, 8, 1.0), (2, 9, 0.96875), (2, 10, 0.9375),
+            (2, 11, 1.0),
+            (3, 4, 0.90625), (3, 5, 0.96875), (3, 6, 1.0), (3, 7, 0.90625),
+            (3, 8, 0.96875), (3, 9, 1.0), (3, 10, 0.90625), (3, 11, 0.96875),
+            (4, 5, 0.9375), (4, 6, 0.90625), (4, 7, 1.0), (4, 8, 0.9375),
+            (4, 9, 0.90625), (4, 10, 1.0), (4, 11, 0.9375),
+            (5, 6, 0.96875), (5, 7, 0.9375), (5, 8, 1.0), (5, 9, 0.96875),
+            (5, 10, 0.9375), (5, 11, 1.0),
+            (6, 7, 0.90625), (6, 8, 0.96875), (6, 9, 1.0), (6, 10, 0.90625),
+            (6, 11, 0.96875),
+            (7, 8, 0.9375), (7, 9, 0.90625), (7, 10, 1.0), (7, 11, 0.9375),
+            (8, 9, 0.96875), (8, 10, 0.9375), (8, 11, 1.0),
+            (9, 10, 0.90625), (9, 11, 0.96875),
+            (10, 11, 0.9375),
+        ], columns=["id_a", "id_b", "est_jaccard"])
         nw = new.sort_values(key, ignore_index=True)
-        pd.testing.assert_frame_equal(lg, nw, check_dtype=False)
+        pd.testing.assert_frame_equal(expected, nw, check_dtype=False)
 
-    def test_distinct_content_embedding_matches_legacy(self, spark):
-        """Same equivalence for the hyperplane-LSH embedding operator,
-        grouping on the raw vector array."""
+    def test_minhash_params_independent_of_call_order(self):
+        """The hash family for num_hashes=k must not depend on which k a
+        (reused) Python worker saw first: slicing a longer draw shifts
+        the b coefficients, so the pin above would hold or fail
+        depending on the tests that ran before it."""
+        rng = np.random.default_rng(1234)
+        a = rng.integers(1, 1 << 61, size=32, dtype=np.uint64) | np.uint64(1)
+        b = rng.integers(0, 1 << 61, size=32, dtype=np.uint64)
+        dedup._minhash_params(64)
+        a32, b32 = dedup._minhash_params(32)
+        assert np.array_equal(a32, a) and np.array_equal(b32, b)
+
+    def test_distinct_content_embedding_pinned(self, spark):
+        """Same pin for the hyperplane-LSH embedding operator, grouping
+        on the raw vector array: the 4 exact duplicate vectors pair with
+        their originals at cos_sim 1.0 and nothing else passes 0.9 (the
+        expected frame is the every-row-through-buckets output)."""
         rng = np.random.default_rng(5)
         base = rng.standard_normal((8, 64))
         vecs = np.vstack([base, base[:4]])  # 4 exact duplicate vectors
@@ -162,16 +170,15 @@ class TestBucketCapSemantics:
         df = spark.createDataFrame(
             pd.DataFrame(rows, columns=["vec_id", "embedding"])
         )
-        kw = dict(cos_threshold=0.9)
-        legacy = dedup.embedding_near_dup(
-            df, distinct_content=False, **kw
-        ).toPandas()
-        new = dedup.embedding_near_dup(df, **kw).toPandas()
+        new = dedup.embedding_near_dup(df, cos_threshold=0.9).toPandas()
         dedup.release_cached()
         key = ["id_a", "id_b"]
-        lg = legacy.sort_values(key, ignore_index=True)
+        expected = pd.DataFrame(
+            [(0, 8, 1.0), (1, 9, 1.0), (2, 10, 1.0), (3, 11, 1.0)],
+            columns=["id_a", "id_b", "cos_sim"],
+        )
         nw = new.sort_values(key, ignore_index=True)
-        pd.testing.assert_frame_equal(lg, nw, check_dtype=False)
+        pd.testing.assert_frame_equal(expected, nw, check_dtype=False)
 
     def test_recall_at_cap_measured(self, spark):
         """The star-pairing recall trade, MEASURED (VERDICT r3 #6): an
@@ -218,48 +225,6 @@ class TestBucketCapSemantics:
         )
         recall3 = len(got3 & true_pairs) / len(true_pairs)
         assert recall3 == 1.0
-
-
-class TestMinhashJvmImpl:
-    def test_bands_vary_and_identical_docs_collide(self, spark):
-        """Two contracts of the all-JVM signature (r5): (a) distinct
-        seeds produce distinct per-band hash functions — guards the
-        transform-INDEX-shadowing regression where a two-parameter
-        lambda let Spark bind the seed to the array index and every
-        component collapsed to one value; (b) identical text gives an
-        identical signature (est 1.0), the exact-dup contract."""
-        pdf = pd.DataFrame(
-            {
-                "doc_id": [1, 2],
-                "text": ["the quick brown fox jumps over the lazy dog"] * 2,
-            }
-        )
-        sig = dedup.minhash_signature_jvm(
-            spark.createDataFrame(pdf), num_hashes=16
-        )
-        rows = {r["id"]: r["sig"] for r in sig.collect()}
-        assert rows[1] == rows[2]  # identical docs collide per-component
-        assert len(set(rows[1])) > 8  # bands genuinely vary
-
-    def test_jvm_impl_recovers_exact_dups(self, spark):
-        corpus = spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "doc_id": [1, 2, 3, 4],
-                    "text": [
-                        "alpha beta gamma delta epsilon zeta",
-                        "alpha beta gamma delta epsilon zeta",
-                        "completely different content here now",
-                        "unrelated text about something else",
-                    ],
-                }
-            )
-        )
-        pairs = dedup.minhash_lsh_dedup(
-            corpus, jaccard_threshold=0.5, impl="jvm"
-        )
-        got = {(r["id_a"], r["id_b"], r["est_jaccard"]) for r in pairs.collect()}
-        assert (1, 2, 1.0) in got
 
 
 class TestSimhashVectorized:
@@ -536,10 +501,10 @@ class TestConnectedComponents:
 
 class TestEmbeddingZeroVectors:
     def test_zero_vector_pairs_divergence(self, spark):
-        """Documented divergence (round-6 review): bit-identical
-        all-zero embeddings pair at cos_sim 1.0 under the default
-        distinct-content collapse (they ARE exact duplicates), while
-        the legacy path's 0/0 cosine is NaN/NULL and drops the pair."""
+        """Bit-identical all-zero embeddings pair at cos_sim 1.0 (they
+        ARE exact duplicates), and a zero-norm vector in a cross-content
+        candidate pair neither crashes the query under ANSI mode nor
+        leaks a NULL cosine into the output."""
         rows = [(1, [0.0] * 8), (2, [0.0] * 8), (3, [1.0] + [0.0] * 7)]
         df = spark.createDataFrame(
             rows, "vec_id long, embedding array<double>"
@@ -550,11 +515,4 @@ class TestEmbeddingZeroVectors:
         }
         dedup.release_cached()
         assert (1, 2, 1.0) in out
-        legacy = {
-            (r["id_a"], r["id_b"])
-            for r in dedup.embedding_near_dup(
-                df, dim=8, distinct_content=False
-            ).collect()
-        }
-        dedup.release_cached()
-        assert (1, 2) not in legacy
+        assert not [p for p in out if 3 in p[:2] and p[2] is None]

@@ -584,13 +584,13 @@ def test_polyfill_distributed_plan_shape(spark):
 
 def test_knn_sql_parity(spark):
     """The kNN round loop's SQL-text haversine and guaranteed-radius
-    expressions (r7 driver-latency fix) must be BIT-identical to the
-    Column forms — rank ties and the completion proof depend on exact
-    doubles."""
+    expressions (r7 driver-latency fix) must be BIT-identical to
+    haversine_m_col and to the driver's scalar _guaranteed_radius_m —
+    rank ties and the completion proof depend on exact doubles."""
     from h3_rs_spark.functions.native import haversine_m_col
     from h3_rs_spark.operators.knn import (
         _HAVERSINE_SQL,
-        _guaranteed_radius_col,
+        _guaranteed_radius_m,
         _safe_radius_sql,
     )
 
@@ -608,34 +608,33 @@ def test_knn_sql_parity(spark):
         }
     )
     df = spark.createDataFrame(pdf)
-    want = df.select(
+    want_h = df.select(
         haversine_m_col(
             F.col("q_lat"), F.col("q_lng"), F.col("lat"), F.col("lng")
         ).alias("h"),
-        _guaranteed_radius_col(F.col("ring"), F.col("res_eff")).alias(
-            "s"
-        ),
-    ).toPandas()
+    ).toPandas()["h"].to_numpy()
+    want_s = np.array(
+        [
+            _guaranteed_radius_m(int(r), int(e))
+            for r, e in zip(pdf["ring"], pdf["res_eff"])
+        ],
+        dtype=np.float64,
+    )
     got = df.selectExpr(
         f"{_HAVERSINE_SQL} AS h", f"{_safe_radius_sql()} AS s"
     ).toPandas()
-    # bitwise equality, not approx: the trees must be identical
-    assert (
-        want["h"].to_numpy().tobytes() == got["h"].to_numpy().tobytes()
-    )
-    assert (
-        want["s"].to_numpy().tobytes() == got["s"].to_numpy().tobytes()
-    )
+    # bitwise equality, not approx: the doubles must be identical
+    assert want_h.tobytes() == got["h"].to_numpy().tobytes()
+    assert want_s.tobytes() == got["s"].to_numpy().tobytes()
 
 
 def test_children_one_level_sql_parity(spark):
-    """The SQL-text twin of children_one_level_col (r7 driver-latency
-    fix) must produce the exact same children arrays, including the
-    pentagon digit skip and across resolutions."""
-    from h3_rs_spark.operators.hierarchy_ops import (
-        children_one_level_col,
-        children_one_level_sql,
-    )
+    """The SQL-text children expression (the uncompact explode level)
+    must produce exactly the kernel's children, including the pentagon
+    digit skip and across resolutions. The kernel
+    (indexing.to_children_batch) is pinned by the golden vectors."""
+    from h3_rs_spark.h3core.indexing import to_children_batch
+    from h3_rs_spark.operators.hierarchy_ops import children_one_level_sql
 
     # res-0 pentagon, a res-2 hexagon, a res-8 hexagon, res-1 pentagon
     cells = [
@@ -644,20 +643,19 @@ def test_children_one_level_sql_parity(spark):
         0x8828309769FFFFF,
         0x81083FFFFFFFFFF,
     ]
+    kernel = {}
+    for c in cells:
+        res = (c >> 52) & 15
+        _, kids = to_children_batch(np.array([c], dtype=np.int64), res + 1)
+        kernel[c] = sorted(kids.tolist())
     df = spark.createDataFrame(pd.DataFrame({"cell": cells}))
-    col_form = {
-        r["cell"]: sorted(r["kids"])
-        for r in df.select(
-            "cell", children_one_level_col("cell").alias("kids")
-        ).collect()
-    }
     sql_form = {
         r["cell"]: sorted(r["kids"])
         for r in df.selectExpr(
             "cell", f"{children_one_level_sql('cell')} AS kids"
         ).collect()
     }
-    assert col_form == sql_form
+    assert kernel == sql_form
     # pentagons skip the K digit: 6 children, hexagons 7
     assert len(sql_form[0x8031FFFFFFFFFFF]) == 6
     assert len(sql_form[0x824887FFFFFFFFF]) == 7
